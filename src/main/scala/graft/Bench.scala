@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line {"metric":…,"queries":{name:sec}}.
@@ -66,30 +65,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r15 (guide §2.2 "fewer, larger reduce partitions — let AQE
-      // coalesce"): extend AQE's byte-sized partition coalescing to
-      // plans materialized under .cache(), which otherwise pin
-      // spark.sql.shuffle.partitions-wide layouts for the whole
-      // session (the graph family's session-cached edge lists carried
-      // 32 one-kilobyte partitions into every join of every round:
-      // q_graph_communities burned 52 s CPU / 3.5 s wall at sf0.1).
-      // Not a local[32] constant: at 100 TB the same setting yields
-      // AQE-sized cached partitions. parallelismFirst deliberately
-      // stays at Spark's default (true): a full A/B bench showed
-      // advisory-only coalescing serializes compute-dense small-byte
-      // stages (shingle/md5 pair joins: q_dedup_containment 1.2 →
-      // 4.3 s) — the default's bytes/parallelism floor is the
-      // scale-adaptive middle ground.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session(cpus)
     // absorb session/codegen warm-up outside the measured loop
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
     catch { case _: Throwable => }
@@ -274,11 +251,8 @@ object Bench {
     // low-core run (SPARK_GRAFT_CPUS=8) previously self-reported 32
     // here (r14 verdict item: the field lied; the env var was always
     // honored for execution, only the report was wrong)
-    val cpusUsed =
-      try cpus.trim.toInt
-      catch { case _: Exception => Runtime.getRuntime.availableProcessors }
     val loadJson =
-      s""""cpus":$cpusUsed,""" +
+      s""""cpus":$cpus,""" +
       s""""cpu_total":${fmt(cpuTotal)},""" +
       s""""load":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}""" +
       s""","max":${fmt(loadMax)}},"min_of":$reps""" +

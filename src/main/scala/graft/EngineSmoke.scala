@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{TagString, WriteRequest}
 import graft.engine.LynxEngine
 import graft.tier.ParquetTier
@@ -32,14 +30,7 @@ object EngineSmoke {
     val days = 20
     val hosts = 50
     val batch = 10000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val walDir = Files.createTempDirectory("esmoke-wal").toFile
     val tierDir = Files.createTempDirectory("esmoke-tier").toFile

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: dumps `explain("formatted")` for the named queries
   * (default: a scan/join/agg cross-section) so scan pushdown
   * (`PushedFilters`), column pruning (`ReadSchema`), broadcast
@@ -16,13 +14,7 @@ object Plans {
       else Seq("q_filter_project", "q_join3_topk", "q_join6_star",
         "q1_agg", "q_dedup_minhash_lsh", "q_embed_cosine_pairs",
         "q_ann_lsh", "q_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

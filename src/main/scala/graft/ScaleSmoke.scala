@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,33 +76,14 @@ object ScaleSmoke {
         "q_dedup_keep_best", "q_multimodal_audio_vad", "q_graph_degree",
         "q_winnow_overlap", "q_dq_quantile_sample", "q_graph_kcore",
         "q_ann_recall", "q_sample_kcenter", "q_train_logreg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     generateIfMissing(spark, src, out)
     assertCorpusRates(spark, out)
 
-    // task-level shuffle totals; the listener bus is async, so settle
-    // briefly after each query before reading the counters
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val inputRows = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          inputRows.addAndGet(m.inputMetrics.recordsRead)
-        }
-      }
-    })
+    // shuffle and input totals; read after draining the listener bus
+    val counters = new Profile.Counters
+    spark.sparkContext.addSparkListener(counters)
 
     // absorb session/codegen warm-up outside the measured loop
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
@@ -141,7 +122,7 @@ object ScaleSmoke {
         // iterative queries do real work in eager localCheckpoints
         // during plan building (q_graph_hits runs its 4 half-steps
         // there), which a count()-only window would miss entirely.
-        shuffleRead.set(0); shuffleWrite.set(0); inputRows.set(0)
+        counters.reset()
         val c0 = cpuNs()
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(n)(spark, dir)
@@ -156,10 +137,10 @@ object ScaleSmoke {
         val rows = df.queryExecution.toRdd.count()
         val sec = (System.nanoTime() - t0) / 1e9
         val cpu = if (c0 < 0) -1.0 else (cpuNs() - c0) / 1e9
-        Thread.sleep(300) // drain listener bus
+        GraftBus.drain(spark.sparkContext)
+        val c = counters.counts
         if (sec < best.sec) best = M(sec, cpu, rows,
-          shuffleRead.get / 1e6, shuffleWrite.get / 1e6, bad,
-          inputRows.get)
+          c.shufRead / 1e6, c.shufWrite / 1e6, bad, c.inputRows)
       }
       best
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Result inspector: runs the named queries and prints their rows —
   * the quick cross-engine spot check next to the DuckDB oracle.
   *
@@ -12,13 +10,7 @@ object Show {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_agg")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       val df = SparkEntry.queries(n)(spark, sfDir)

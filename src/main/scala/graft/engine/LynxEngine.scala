@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement,
   LogicalPlan}
 import org.apache.spark.sql.types._
@@ -281,12 +282,21 @@ class LynxEngine(
         "reserved namespace")
       requireStorableName(w.namespace, "namespace")
       requireStorableName(w.measurement, "measurement")
+      // tag keys may not shadow the fixed engine columns or the
+      // reserved `__lynx` namespace (the tier's partition column): a
+      // tag named `timestamp`/`value` would collide in the inferred
+      // schema, and a `__lynx_day` tag would be silently overwritten
+      // at seal time
       w.metadata.keys.foreach(k => require(
         k != "timestamp" && k != "value" && !k.startsWith("__lynx"),
         s"reserved tag key: $k"))
     }
 
-  /** Caller holds writeLock and has already buffered `ws`. */
+  /** Auto-seal: once a table's RAM tail reaches the threshold, spill it
+    * to the day-partitioned parquet tier (the 100 TB path; the
+    * reference keeps everything in RAM forever, SURVEY.md §3.3).
+    * Caller holds writeLock and has already buffered `ws`.
+    */
   private def autoSealAfter(ws: Seq[WriteRequest]): Unit =
     if (tier.isDefined && maxBufferedRows != Int.MaxValue) {
       ws.groupBy(w => (w.namespace, w.measurement)).foreach {
@@ -401,32 +411,11 @@ class LynxEngine(
     writeLock.synchronized(streamHwm.toMap)
 
   def write(w: WriteRequest): Unit = writeLock.synchronized {
-    // tag keys may not shadow the fixed engine columns or the reserved
-    // `__lynx` namespace (the tier's partition column): a tag named
-    // `timestamp`/`value` would collide in the inferred schema, and a
-    // `__lynx_day` tag would be silently overwritten at seal time.
-    // The namespace NUL-prefix guard mirrors validateTags (a data row
-    // in the marker namespace would replay as a marker).
-    require(!w.namespace.startsWith("\u0000"), "reserved namespace")
-    requireStorableName(w.namespace, "namespace")
-    requireStorableName(w.measurement, "measurement")
     checkFence(w.namespace)
-    w.metadata.keys.foreach(k => require(
-      k != "timestamp" && k != "value" && !k.startsWith("__lynx"),
-      s"reserved tag key: $k"))
+    validateTags(Seq(w))
     wal.write(w) // WAL-first invariant (reference lynx.rs:32-33,64)
     buffer.insert(w)
-    // auto-seal: once a table's RAM tail exceeds the threshold, spill
-    // it to the day-partitioned parquet tier (the 100 TB path; the
-    // reference keeps everything in RAM forever, SURVEY.md §3.3)
-    if (tier.isDefined && maxBufferedRows != Int.MaxValue) {
-      val key = (w.namespace, w.measurement)
-      val n = bufferedPerTable.getOrElse(key, 0) + 1
-      if (n >= maxBufferedRows) {
-        seal(w.namespace, w.measurement)
-        bufferedPerTable.remove(key)
-      } else bufferedPerTable.update(key, n)
-    }
+    autoSealAfter(Seq(w))
   }
 
   /** Seal a table's buffered partitions to the parquet tier (absent
@@ -460,35 +449,43 @@ class LynxEngine(
           // published files with no marker and replay double-counts
           wal.flush()
           t.publish(namespace, table, stagingId, files)
-          // every seal appends a file per day; at 100 TB the
-          // small-file count, not data volume, becomes the scan
-          // bottleneck. With a threshold configured, compact inline
-          // once the manifest holds `threshold` files BEYOND
-          // compaction's floor of one per day — thresholding on the
-          // total would fire on every seal once the table spans that
-          // many days (a full rewrite per seal). Amortized one
-          // rewrite per `threshold` seals, under the same write lock
-          // every compaction already requires; in-flight queries
-          // keep reading their pinned pre-compaction manifest.
-          if (autoCompactFileThreshold > 0 &&
-              t.redundantFileCount(namespace, table) >=
-                autoCompactFileThreshold) {
-            t.compact(spark, namespace, table)
-            // same hygiene as explicit compact(): the rewrite
-            // orphaned the originals' index entries — drop them now
-            // (amortized: once per `threshold` seals, the same class
-            // as the rewrite itself; scoped to THIS table)
-            pruneIndexes(namespace, table)
-          }
-          // keep the configured bloom/zone indexes current: one
-          // incremental build over JUST the files this seal (or its
-          // inline compaction) published — O(new files), same cost
-          // class as the staging write above, so pruning never lags
-          // the data it should be pruning
-          maintainBloomIndexes(namespace, table)
+          afterPublish(t, namespace, table)
         }
       }
     }
+
+  /** Post-publish upkeep shared by seal and bulk ingest; caller holds
+    * writeLock.
+    *
+    * Every publish appends a file per day; at 100 TB the small-file
+    * count, not data volume, becomes the scan bottleneck. With a
+    * threshold configured, compact inline once the manifest holds
+    * `threshold` files BEYOND compaction's floor of one per day —
+    * thresholding on the total would fire on every seal once the
+    * table spans that many days (a full rewrite per seal). Amortized
+    * one rewrite per `threshold` seals, under the same write lock
+    * every compaction already requires; in-flight queries keep
+    * reading their pinned pre-compaction manifest.
+    */
+  private def afterPublish(t: ParquetTier, namespace: String,
+      table: String): Unit = {
+    if (autoCompactFileThreshold > 0 &&
+        t.redundantFileCount(namespace, table) >=
+          autoCompactFileThreshold) {
+      t.compact(spark, namespace, table)
+      // same hygiene as explicit compact(): the rewrite orphaned the
+      // originals' index entries — drop them now (amortized: once per
+      // `threshold` seals, the same class as the rewrite itself;
+      // scoped to THIS table)
+      pruneIndexes(namespace, table)
+    }
+    // keep the configured bloom/zone indexes current: one incremental
+    // build over JUST the files this publish (or its inline
+    // compaction) added — O(new files), same cost class as the
+    // staging write, so pruning never lags the data it should be
+    // pruning
+    maintainBloomIndexes(namespace, table)
+  }
 
   /** Executor-side BULK-INGEST lane — the backfill door. The HTTP /
     * streaming write plane is driver-side by design (WAL-first, RAM
@@ -569,13 +566,7 @@ class LynxEngine(
         files, bulk = true))
       wal.flush() // marker durable BEFORE publish (the seal ordering)
       t.publish(namespace, table, stagingId, files)
-      if (autoCompactFileThreshold > 0 &&
-          t.redundantFileCount(namespace, table) >=
-            autoCompactFileThreshold) {
-        t.compact(spark, namespace, table)
-        pruneIndexes(namespace, table)
-      }
-      maintainBloomIndexes(namespace, table)
+      afterPublish(t, namespace, table)
     }
     files.size
   }
@@ -1228,6 +1219,31 @@ object LynxEngine {
     }
   }
 
+  /** The top-level AND conjuncts of a predicate. */
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+      conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  /** Epoch micros of a timestamp literal, or of a date or datetime
+    * string literal read as UTC, under any casts.
+    */
+  private def micros(e: Expression): Option[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    e match {
+      case Literal(v: Long, TimestampType) => Some(v)
+      case Literal(s, StringType) =>
+        val str = String.valueOf(s)
+        val full = if (str.length == 10) str + " 00:00:00" else str
+        try Some(java.time.LocalDateTime.parse(full.replace(' ', 'T'))
+          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
+        catch { case _: Exception => None }
+      case Cast(c, _, _, _) => micros(c)
+      case _ => None
+    }
+  }
+
   /** Conservative UTC-day bounds for tier partition pruning: applies
     * ONLY to a single-relation query (after CTE inlining) with no
     * subquery expressions. Bounds come from the conjuncts of every
@@ -1244,7 +1260,6 @@ object LynxEngine {
   def dayBounds(rawPlan: LogicalPlan): Option[(String, String)] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.plans.logical
-    import org.apache.spark.sql.types.{StringType, TimestampType}
     val plan = inlineCtes(rawPlan)
     val simple =
       plan.collect { case r: UnresolvedRelation => r }.size == 1 &&
@@ -1291,26 +1306,11 @@ object LynxEngine {
       case f: logical.Filter if preservesTs(f.child) => f.condition
     }
     if (scanFilters.isEmpty) return None
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     def isTs(e: Expression): Boolean = e match {
       case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
         a.nameParts.last.equalsIgnoreCase("timestamp")
       case Cast(c, _, _, _) => isTs(c)
       case _ => false
-    }
-    def micros(e: Expression): Option[Long] = e match {
-      case Literal(v: Long, TimestampType) => Some(v)
-      case Literal(s, StringType) =>
-        val str = String.valueOf(s)
-        val full = if (str.length == 10) str + " 00:00:00" else str
-        try Some(java.time.LocalDateTime.parse(full.replace(' ', 'T'))
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
-        catch { case _: Exception => None }
-      case Cast(c, _, _, _) => micros(c)
-      case _ => None
     }
     var lo: Option[Long] = None
     var hi: Option[Long] = None
@@ -1410,10 +1410,6 @@ object LynxEngine {
       case d: logical.Distinct => safeRels(d.child)
       case _ => Nil
     }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     plan.foreach {
       case f: logical.Filter =>
         val rels = safeRels(f.child)
@@ -1482,17 +1478,6 @@ object LynxEngine {
           if a.nameParts.last.equalsIgnoreCase("timestamp") =>
         Some(a.nameParts.map(_.toLowerCase))
       case Cast(c, _, _, _) => tsParts(c)
-      case _ => None
-    }
-    def micros(e: Expression): Option[Long] = e match {
-      case Literal(v: Long, TimestampType) => Some(v)
-      case Literal(s, StringType) =>
-        val str = String.valueOf(s)
-        val full = if (str.length == 10) str + " 00:00:00" else str
-        try Some(java.time.LocalDateTime.parse(full.replace(' ', 'T'))
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
-        catch { case _: Exception => None }
-      case Cast(c, _, _, _) => micros(c)
       case _ => None
     }
     val lo = scala.collection.mutable.Map.empty[String, Long]

@@ -458,9 +458,9 @@ class AnnStoreSpec extends AnyFunSuite {
       val results = qvecs.map { case (qid, v) =>
         qid -> restarted.query("pw", v, 10, 8).get
       }
-      // listener events post asynchronously — allow them to land
-      // before counting (asserting ZERO, so a fixed drain suffices)
-      Thread.sleep(1000)
+      // listener events post asynchronously — drain the bus before
+      // counting
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       assert(jobs.get() == 0,
         s"post-prewarm serving ran ${jobs.get()} Spark job(s) — the " +
           "cache was not filled")

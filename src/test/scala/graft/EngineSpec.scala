@@ -1517,11 +1517,9 @@ class EngineSpec extends AnyFunSuite {
       try e.ingestDataset("events", "cpu", df)
       finally {
         // listener events post asynchronously; the actions themselves
-        // completed inside ingestDataset, so a short drain suffices
-        val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-        while (sites.isEmpty && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        Thread.sleep(200)
+        // completed inside ingestDataset, so draining the bus delivers
+        // every one of their events
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
       }
     assert(published > 0)
