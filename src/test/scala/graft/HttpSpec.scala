@@ -6,6 +6,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.WriteRequest
 import graft.engine.LynxEngine
 import graft.http.LynxServer
 
@@ -487,6 +488,225 @@ class HttpSpec extends AnyFunSuite {
       assert(f1.get(30, TimeUnit.SECONDS).statusCode() == 200)
       assert(f2.get(30, TimeUnit.SECONDS).statusCode() == 200)
     } finally server.stop()
+  }
+
+  /** An engine whose HTTP-facing entry points throw `fault` when it is
+    * set, so the status table can drive every route's failure mapping.
+    * Rollups are bounded to one group per segment: a table with two
+    * tag values then trips the store's cardinality check.
+    */
+  private class FaultyEngine(dir: java.io.File,
+      t: Option[graft.tier.ParquetTier])
+      extends LynxEngine(SparkFixture.spark, dir, 1024 * 1024, t) {
+    // null, not None: the superclass constructor may call an override
+    // before this field is initialized
+    @volatile var fault: Exception = null
+    private def trip(): Unit = if (fault != null) throw fault
+    override lazy val rollups = t.map(
+      new graft.engine.RollupStore(SparkFixture.spark, _, maxGroups = 1))
+    override def write(w: WriteRequest): Unit = { trip(); super.write(w) }
+    override def writeBatch(ws: Seq[WriteRequest]): Unit = {
+      trip(); super.writeBatch(ws)
+    }
+    override def query(ns: String, sql: String, asOf: Option[Long]) = {
+      trip(); super.query(ns, sql, asOf)
+    }
+    override def checkpoint(): Unit = { trip(); super.checkpoint() }
+    override def compact(ns: String, table: String,
+        clusterBy: Seq[String]): Unit = {
+      trip(); super.compact(ns, table, clusterBy)
+    }
+    override def tierVersions(ns: String, table: String) = {
+      trip(); super.tierVersions(ns, table)
+    }
+    override def expire(ns: String, table: String, day: String): Int = {
+      trip(); super.expire(ns, table, day)
+    }
+    override def fence(ns: String): Unit = { trip(); super.fence(ns) }
+    override def unfence(ns: String): Unit = { trip(); super.unfence(ns) }
+    override def exportSnapshot(ns: String, table: String,
+        version: Option[Long], dest: java.io.File): Int = {
+      trip(); super.exportSnapshot(ns, table, version, dest)
+    }
+    override def exportNamespace(ns: String, dest: java.io.File) = {
+      trip(); super.exportNamespace(ns, dest)
+    }
+    override def importSnapshot(ns: String, table: String,
+        src: java.io.File): Long = {
+      trip(); super.importSnapshot(ns, table, src)
+    }
+    override def importNamespace(ns: String, src: java.io.File) = {
+      trip(); super.importNamespace(ns, src)
+    }
+    override def streamHighWaterMarks: Map[String, Long] = {
+      trip(); super.streamHighWaterMarks
+    }
+  }
+
+  test("HTTP status contract: every route's status, Retry-After and " +
+    "error body for a wrong method, a malformed body, a missing " +
+    "feature, an IllegalArgumentException, a fenced write and any " +
+    "other engine failure") {
+    val tierDir = Files.createTempDirectory("contract-tier").toFile
+    val exchange = Files.createTempDirectory("contract-exchange").toFile
+    val full = new FaultyEngine(
+      Files.createTempDirectory("contract-wal").toFile,
+      Some(new graft.tier.ParquetTier(tierDir)))
+    val bare = new FaultyEngine(
+      Files.createTempDirectory("contract-bare").toFile, None)
+    // ns/cpu: one sealed file holding two hosts (trips the one-group
+    // rollup bound); ns/gone: a sealed file overwritten with garbage
+    // (any read of it fails inside Spark)
+    full.writeBatch(Seq("a", "b").map(h => WriteRequest("ns", "cpu", "1",
+      Map("host" -> graft.core.TagString(h)), 1L)))
+    full.write(WriteRequest("ns", "gone", "1",
+      Map("host" -> graft.core.TagString("a")), 1L))
+    full.checkpoint()
+    val goneFiles = Files.walk(tierDir.toPath).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.toString.contains("gone") &&
+        p.getFileName.toString.endsWith(".parquet") &&
+        Files.isRegularFile(p))
+    assert(goneFiles.nonEmpty)
+    goneFiles.foreach(p => Files.write(p, "not parquet".getBytes))
+    // an ANN index directory whose centroids are not JSON
+    val brokenAnn = new java.io.File(tierDir, "_ann/broken")
+    new java.io.File(brokenAnn, "cells.parquet").mkdirs()
+    Files.write(new java.io.File(brokenAnn, "centroids.json").toPath,
+      "{not json".getBytes)
+    full.fence("fenced")
+    val fullSrv = new LynxServer(full, "127.0.0.1", 0,
+      exchangeDir = Some(exchange))
+    val bareSrv = new LynxServer(bare, "127.0.0.1", 0)
+    fullSrv.start(); bareSrv.start()
+
+    // (name, on the tier+exchange server?, path, body (None = GET),
+    //  fault, expected status, Retry-After present, body has "error")
+    case class Row(name: String, onFull: Boolean, path: String,
+        body: Option[String], fault: Exception,
+        status: Int, retryAfter: Boolean, error: Boolean)
+    val iae = new IllegalArgumentException("bad argument")
+    val boom = new IllegalStateException("engine failure")
+    val api = "/api/v1"
+    val valid = Seq(
+      s"$api/write" ->
+        """{"namespace":"ns","measurement":"cpu","value":"1","timestamp":5}""",
+      s"$api/query" ->
+        """{"namespace":"ns","query":"SELECT value FROM cpu","format":"json"}""",
+      s"$api/admin/checkpoint" -> "",
+      s"$api/admin/compact" -> """{"namespace":"ns","table":"cpu"}""",
+      s"$api/rollup" ->
+        """{"namespace":"ns","table":"cpu","group":"host","value":"value"}""",
+      s"$api/ann" -> """{"index":"broken","vector":[1.0]}""",
+      s"$api/bloom" -> """{"namespace":"ns","table":"cpu","column":"host"}""",
+      s"$api/admin/versions" -> """{"namespace":"ns","table":"cpu"}""",
+      s"$api/admin/expire" ->
+        """{"namespace":"ns","table":"cpu","before_day":"1960-01-01"}""",
+      s"$api/admin/fence" -> """{"namespace":"other"}""",
+      s"$api/admin/unfence" -> """{"namespace":"other"}""",
+      s"$api/admin/export" -> """{"namespace":"ns","snapshot":"snap1"}""",
+      s"$api/admin/import" -> """{"namespace":"ns","snapshot":"snap1"}""",
+      s"$api/admin/dropsnapshot" -> """{"snapshot":"snap1"}""")
+    val body = valid.toMap
+    val malformed = Some("not json")
+    val tierOnly = Set("rollup", "ann", "bloom").map(s"$api/" + _)
+    val snapshot = Set("export", "import", "dropsnapshot")
+      .map(s"$api/admin/" + _)
+    // routes that call straight into the engine (the fault fires there)
+    val engineRoutes = valid.map(_._1)
+      .filterNot(p => tierOnly(p) || p.endsWith("dropsnapshot"))
+    // routes whose handler maps IllegalArgumentException to 422
+    val contract = Set(s"$api/admin/export", s"$api/admin/import")
+    val rows: Seq[Row] =
+      Seq(
+        Row("health GET", false, "/health", None, null, 200, false, false),
+        Row("health POST junk", false, "/health", malformed, null,
+          200, false, false),
+        Row("metrics GET", true, "/metrics", None, null, 200, false, false),
+        Row("metrics POST junk", true, "/metrics", malformed, null,
+          200, false, false),
+        Row("metrics failure", true, "/metrics", None, boom,
+          500, false, false),
+        Row("metrics IAE", true, "/metrics", None, iae, 500, false, false)
+      ) ++ valid.map { case (p, _) =>
+        Row(s"$p GET", true, p, None, null, 405, false, false)
+      } ++ valid.map { case (p, _) =>
+        val st = if (p.endsWith("checkpoint")) 200 else 422
+        Row(s"$p malformed", !p.endsWith("checkpoint"), p, malformed,
+          null, st, false, false)
+      } ++ (tierOnly ++ snapshot).toSeq.sorted.flatMap { p =>
+        Seq(Row(s"$p without tier/exchange", false, p, Some(body(p)), null,
+          404, false, false)) ++
+          (if (snapshot(p)) Seq(Row(s"$p malformed without exchange",
+            false, p, malformed, null, 404, false, false))
+          else Nil)
+      } ++ engineRoutes.flatMap { p =>
+        Seq(
+          Row(s"$p IAE", true, p, Some(body(p)), iae,
+            if (contract(p)) 422 else 500, false, contract(p)),
+          Row(s"$p engine failure", true, p, Some(body(p)), boom,
+            500, false, contract(p)))
+      } ++ Seq(
+        Row("rollup cardinality IAE", true, s"$api/rollup",
+          Some(body(s"$api/rollup")), null, 422, false, true),
+        Row("rollup unknown column", true, s"$api/rollup",
+          Some("""{"namespace":"ns","table":"cpu","group":"nosuch",""" +
+            """"value":"value"}"""), null, 500, false, false),
+        Row("ann non-finite vector IAE", true, s"$api/ann",
+          Some("""{"index":"broken","vector":[1e39]}"""), null,
+          422, false, true),
+        Row("ann unreadable index", true, s"$api/ann",
+          Some(body(s"$api/ann")), null, 500, false, false),
+        Row("ann unknown index", true, s"$api/ann",
+          Some("""{"index":"nope","vector":[1.0]}"""), null,
+          404, false, false),
+        Row("bloom non-string column IAE", true, s"$api/bloom",
+          Some("""{"namespace":"ns","table":"cpu","column":"timestamp"}"""),
+          null, 422, false, true),
+        Row("bloom unreadable file", true, s"$api/bloom",
+          Some("""{"namespace":"ns","table":"gone","column":"host"}"""),
+          null, 500, false, false),
+        Row("dropsnapshot", true, s"$api/admin/dropsnapshot",
+          Some(body(s"$api/admin/dropsnapshot")), null, 200, false, false),
+        Row("fenced write", true, s"$api/write",
+          Some("""{"namespace":"fenced","measurement":"m","value":"1",""" +
+            """"timestamp":1}"""), null, 422, true, true),
+        Row("fenced batch", true, s"$api/write",
+          Some("""[{"namespace":"fenced","measurement":"m","value":"1",""" +
+            """"timestamp":1},{"namespace":"fenced","measurement":"m",""" +
+            """"value":"2","timestamp":2}]"""), null, 422, true, true),
+        Row("path-like namespace", true, s"$api/write",
+          Some("""{"namespace":"a/b","measurement":"m","value":"1",""" +
+            """"timestamp":1}"""), null, 500, false, false),
+        Row("batch with a path-like measurement", true, s"$api/write",
+          Some("""[{"namespace":"ns","measurement":"m","value":"1",""" +
+            """"timestamp":1},{"namespace":"ns","measurement":"..",""" +
+            """"value":"2","timestamp":2}]"""), null, 500, false, false))
+
+    try {
+      val failures = rows.flatMap { r =>
+        val engine = if (r.onFull) full else bare
+        val port = (if (r.onFull) fullSrv else bareSrv).boundPort
+        val req = HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$port${r.path}"))
+        engine.fault = r.fault
+        val resp = try client.send(r.body match {
+            case Some(b) =>
+              req.POST(HttpRequest.BodyPublishers.ofString(b)).build()
+            case None => req.GET().build()
+          }, HttpResponse.BodyHandlers.ofString())
+          finally engine.fault = null
+        val got = (resp.statusCode(),
+          resp.headers().firstValue("Retry-After").isPresent,
+          resp.body().contains("\"error\""))
+        if (got == ((r.status, r.retryAfter, r.error))) None
+        else Some(s"${r.name}: expected ${(r.status, r.retryAfter,
+          r.error)}, got $got ${resp.body().take(200)}")
+      }
+      assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+    } finally {
+      fullSrv.stop(); bareSrv.stop()
+    }
   }
 
   test("ANN endpoint serves IVF top-k matching q_ann_ivf on the same " +
