@@ -4,7 +4,7 @@ import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 
-import graft.Verify.jsonString
+import graft.engine.Sinks.jsonString
 
 /** Per-query execution profiler (optimization-round instrumentation;
   * not part of the driver contract). For each named query — default:

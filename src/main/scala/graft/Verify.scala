@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.engine.Sinks.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -63,20 +66,6 @@ object Verify {
       .digest(body.getBytes("UTF-8"))
     (md.map("%02x".format(_)).mkString, rows.length)
   }
-  /** JSON string literal: escapes backslash, quote, and ALL control
-    * chars (<0x20) — a tab or CR in builder-authored SQL would otherwise
-    * make the driver's json.load fail and silently zero the round's
-    * correctness.
-    */
-  def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)

@@ -200,14 +200,14 @@ final class AnnStore(spark: SparkSession, tier: ParquetTier,
     Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
       if (f.isDirectory && f.getName.matches("v_\\d+") &&
           !keep(f.getName) && f.lastModified() < cutoff)
-        deleteRec(f)
+        ParquetTier.deleteTree(f)
     }
     Seq("centroids.json", "stats.json").foreach { n =>
       val f = new File(dir, n)
       if (f.isFile) { f.delete(): Unit }
     }
     val legacyCells = new File(dir, "cells.parquet")
-    if (legacyCells.isDirectory) deleteRec(legacyCells)
+    if (legacyCells.isDirectory) ParquetTier.deleteTree(legacyCells)
   }
 
   /** Incremental maintenance — q_ann_ivf_incremental's no-retrain
@@ -334,12 +334,7 @@ final class AnnStore(spark: SparkSession, tier: ParquetTier,
         .write.mode("overwrite")
         .parquet(new File(tmp, "embeddings.parquet").getPath)
       build(name, tmp.getPath)
-    } finally deleteRec(tmp)
-  }
-
-  private def deleteRec(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(): Unit
+    } finally ParquetTier.deleteTree(tmp)
   }
 
   /** (appended, outsideOldRadius, ratio) totals since the last

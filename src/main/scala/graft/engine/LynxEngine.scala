@@ -254,20 +254,8 @@ class LynxEngine(
     autoSealAfter(ws)
   }
 
-  /** Namespace/table names materialize as tier path segments at seal
-    * time; a pathy name ("..", "a/b") accepted at ingest would later
-    * make the seal throw with the rows already acknowledged — so the
-    * ingest doors reject them up front (ParquetTier.safeSeg is the
-    * storage-side choke point; this keeps acknowledged rows always
-    * sealable). Documented deviation: the RAM-only reference accepts
-    * any name (lynx.rs stores them as map keys only).
-    */
-  private def isStorableName(s: String): Boolean =
-    s.nonEmpty && s != "." && s != ".." &&
-      !s.contains('/') && !s.contains('\\')
-
   private def requireStorableName(s: String, what: String): Unit =
-    require(isStorableName(s),
+    require(LynxEngine.isStorableName(s),
       s"$what is not a storable name (path separators and '..' are " +
         s"not allowed): '$s'")
 
@@ -852,7 +840,7 @@ class LynxEngine(
           // (it would list arbitrary host dirs); it can only exist as
           // a buffer key, so the tier simply does not have it
           val present =
-            if (isStorableName(namespace)) t.tables(namespace)
+            if (LynxEngine.isStorableName(namespace)) t.tables(namespace)
             else Set.empty[String]
           val acquired =
             scala.collection.mutable.Map.empty[String, graft.tier.TierSnapshot]
@@ -1036,6 +1024,19 @@ class LynxEngine(
 }
 
 object LynxEngine {
+
+  /** Namespace/table names materialize as tier path segments at seal
+    * time; a pathy name ("..", "a/b") accepted at ingest would later
+    * make the seal throw with the rows already acknowledged — so the
+    * ingest doors (and the HTTP write parser) reject them up front
+    * (ParquetTier.safeSeg is the storage-side choke point; this keeps
+    * acknowledged rows always sealable). Documented deviation: the
+    * RAM-only reference accepts any name (lynx.rs stores them as map
+    * keys only).
+    */
+  def isStorableName(s: String): Boolean =
+    s.nonEmpty && s != "." && s != ".." &&
+      !s.contains('/') && !s.contains('\\')
 
   /** A write refused because its namespace is migration-fenced — the
     * HTTP layer maps this to 422 + Retry-After (transient for a

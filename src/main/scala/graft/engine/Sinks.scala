@@ -125,6 +125,10 @@ object Sinks {
     sb.toString
   }
 
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (<0x20), so a tab or CR in a value (or in query SQL written
+    * to oracle_sql.json) cannot break a JSON reader.
+    */
   def jsonString(s: String): String = {
     val sb = new StringBuilder("\"")
     s.foreach {

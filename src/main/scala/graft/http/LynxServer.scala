@@ -1,15 +1,13 @@
 package graft.http
 
 import java.io.File
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.{TagNumber, TagString, TagValue, WriteRequest}
 import graft.engine.{LynxEngine, Sinks}
+import graft.tier.ParquetTier
 
 /** HTTP API (reference main.rs:99-103): POST /api/v1/write,
   * POST /api/v1/query, GET /health. JSON bodies match the reference's
@@ -44,8 +42,7 @@ object Json {
     }
   }
 
-  private def parseWriteNode(
-      n: com.fasterxml.jackson.databind.JsonNode): WriteRequest = {
+  private def parseWriteNode(n: JsonNode): WriteRequest = {
     require(n.hasNonNull("namespace") && n.hasNonNull("measurement") &&
       n.hasNonNull("value") && n.hasNonNull("timestamp"),
       "missing required field")
@@ -64,6 +61,13 @@ object Json {
     // (discarding later writes) — reject the class, not one name
     require(!n.get("namespace").asText().startsWith("\u0000"),
       "reserved namespace")
+    // names become tier path segments: a path-like one is a malformed
+    // write, not an engine failure (the engine repeats the check for
+    // embedded callers)
+    require(LynxEngine.isStorableName(n.get("namespace").asText()) &&
+      LynxEngine.isStorableName(n.get("measurement").asText()),
+      "namespace and measurement may not contain path separators or " +
+        "be '.' or '..'")
     val metadata: Map[String, TagValue] =
       if (n.hasNonNull("metadata")) {
         val m = n.get("metadata")
@@ -236,12 +240,8 @@ object Json {
   def parseSnapshot(body: Array[Byte])
       : (String, String, Option[String], Option[Long]) = {
     val n = mapper.readTree(body)
-    require(n.hasNonNull("namespace") && n.hasNonNull("snapshot"),
-      "missing required field")
-    val snap = n.get("snapshot").asText()
-    require(snap.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
-      !snap.contains(".."),
-      "snapshot must be a bare identifier")
+    require(n.hasNonNull("namespace"), "missing required field")
+    val snap = snapshotId(n)
     val table =
       if (n.hasNonNull("table")) Some(n.get("table").asText()) else None
     val version = if (!n.hasNonNull("version")) None else {
@@ -251,242 +251,133 @@ object Json {
     }
     (n.get("namespace").asText(), snap, table, version)
   }
+
+  /** {snapshot} for /admin/dropsnapshot. */
+  def parseSnapshotId(body: Array[Byte]): String =
+    snapshotId(mapper.readTree(body))
+
+  private def snapshotId(n: JsonNode): String = {
+    require(n.hasNonNull("snapshot"), "missing required field")
+    val snap = n.get("snapshot").asText()
+    require(snap.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
+      !snap.contains(".."),
+      "snapshot must be a bare identifier")
+    snap
+  }
 }
 
 final class LynxServer(engine: LynxEngine, host: String, port: Int,
     exchangeDir: Option[File] = None) {
-  private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
-  // without an executor every request serializes on the dispatch
-  // thread; the reference serves each request on its own tokio task
-  // (main.rs:91) and the engine is concurrency-safe (ConcurrencySpec),
-  // so give the server a real pool
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(
-    math.max(8, Runtime.getRuntime.availableProcessors()))
-  server.setExecutor(pool)
-
-  private def respond(ex: HttpExchange, code: Int, body: String = ""): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
-    if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
-  server.createContext("/health", (ex: HttpExchange) => respond(ex, 200))
-
-  // operational introspection (extension; the reference exposes only
-  // /health): buffered row/namespace counts and result-cache hits as
-  // one flat JSON object — enough for a scrape without a client lib
-  server.createContext("/metrics", (ex: HttpExchange) => {
-    try {
-      // one rowCounts snapshot feeds both counters, so a concurrent
-      // write can't tear the response into a state that never existed
-      // (namespaces = those with buffered rows, by construction)
-      val counts = engine.buffer.rowCounts
-      val rows = counts.values.map(_.toLong).sum
-      val namespaces = counts.keysIterator.map(_._1).toSet.size
-      // per-ANN-index drift since the last build: the rebuild alarm
-      // AnnStore.append maintains (outside-old-radius fraction of
-      // appended vectors) — dashboards watch the ratio climb
-      val driftEntries = engine.ann.toSeq.flatMap { as =>
-        as.indexNames.flatMap(n => as.drift(n).map { case (a, o, r) =>
-          s""""$n":{"appended":$a,"outside":$o,"ratio":$r}"""
-        })
-      }
-      val annDrift =
-        if (driftEntries.isEmpty) ""
-        else driftEntries.mkString(""","ann_drift":{""", ",", "}")
-      // per-sink streaming high-water marks (WAL-derived): a stalled
-      // stream reads as a mark that stops advancing between scrapes
-      val hwms = engine.streamHighWaterMarks
-      val hwmJson =
-        if (hwms.isEmpty) ""
-        else hwms.toSeq.sortBy(_._1).map { case (s, b) =>
-          s"${graft.engine.Sinks.jsonString(s)}:$b"
-        }.mkString(""","stream_hwm":{""", ",", "}")
-      // WAL tail repairs at the last startup: data-affecting events
-      // an operator must see without grepping stderr
-      val recov = engine.walRecoveries
-      val recovJson =
-        if (recov.isEmpty) ""
-        else recov.map { r =>
-          s"""{"segment":${Sinks.jsonString(r.segment)},"kept_bytes":${
-            r.keptBytes},"discarded_bytes":${r.discardedBytes
-            },"reason":${Sinks.jsonString(r.reason)}}"""
-        }.mkString(""","wal_recoveries":[""", ",", "]")
-      respond(ex, 200,
-        s"""{"buffered_rows":$rows""" +
-          s""","namespaces":$namespaces""" +
-          s""","result_cache_hits":${engine.resultCacheHits.get}""" +
-          annDrift + hwmJson + recovJson + "}")
-    } catch {
-      case e: Exception =>
-        System.err.println(e)
-        respond(ex, 500)
-    }
-  })
+  import Routes.{ArgumentContract, Explained}
 
   // malformed request bodies → 422 (the reference's axum Json
   // extractor rejects them pre-handler with a 4xx); engine-side
   // failures, including bad SQL, → 500 (reference main.rs:84-87)
-  server.createContext("/api/v1/write", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseWriteBatch(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right(Seq(w)) =>
-          try {
-            engine.write(w)
-            respond(ex, 200)
-          } catch {
-            case e: LynxEngine.NamespaceFencedException =>
-              fencedResponse(ex, e)
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-        case Right(ws) =>
-          try {
-            engine.writeBatch(ws)
-            respond(ex, 200)
-          } catch {
-            case e: LynxEngine.NamespaceFencedException =>
-              fencedResponse(ex, e)
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
+  private val routes = new Routes(host, port, explainBadBodies = false)
 
-  /** Migration-fenced namespace: 422 + Retry-After — transient for a
-    * racing writer (a retry after the router flip lands on the new
-    * owner), so it must be distinguishable from a permanent 4xx.
-    */
-  private def fencedResponse(ex: HttpExchange,
-      e: LynxEngine.NamespaceFencedException): Unit = {
-    ex.getResponseHeaders.set("Retry-After", "2")
-    respond(ex, 422, s"""{"error":${
-      Sinks.jsonString(e.getMessage)},"retryable":true}""")
+  routes.any("/health")(Reply(200))
+
+  // operational introspection (extension; the reference exposes only
+  // /health): buffered row/namespace counts and result-cache hits as
+  // one flat JSON object — enough for a scrape without a client lib
+  routes.any("/metrics") {
+    // one rowCounts snapshot feeds both counters, so a concurrent
+    // write can't tear the response into a state that never existed
+    // (namespaces = those with buffered rows, by construction)
+    val counts = engine.buffer.rowCounts
+    val rows = counts.values.map(_.toLong).sum
+    val namespaces = counts.keysIterator.map(_._1).toSet.size
+    // per-ANN-index drift since the last build: the rebuild alarm
+    // AnnStore.append maintains (outside-old-radius fraction of
+    // appended vectors) — dashboards watch the ratio climb
+    val driftEntries = engine.ann.toSeq.flatMap { as =>
+      as.indexNames.flatMap(n => as.drift(n).map { case (a, o, r) =>
+        s""""$n":{"appended":$a,"outside":$o,"ratio":$r}"""
+      })
+    }
+    val annDrift =
+      if (driftEntries.isEmpty) ""
+      else driftEntries.mkString(""","ann_drift":{""", ",", "}")
+    // per-sink streaming high-water marks (WAL-derived): a stalled
+    // stream reads as a mark that stops advancing between scrapes
+    val hwms = engine.streamHighWaterMarks
+    val hwmJson =
+      if (hwms.isEmpty) ""
+      else hwms.toSeq.sortBy(_._1).map { case (s, b) =>
+        s"${Sinks.jsonString(s)}:$b"
+      }.mkString(""","stream_hwm":{""", ",", "}")
+    // WAL tail repairs at the last startup: data-affecting events
+    // an operator must see without grepping stderr
+    val recov = engine.walRecoveries
+    val recovJson =
+      if (recov.isEmpty) ""
+      else recov.map { r =>
+        s"""{"segment":${Sinks.jsonString(r.segment)},"kept_bytes":${
+          r.keptBytes},"discarded_bytes":${r.discardedBytes
+          },"reason":${Sinks.jsonString(r.reason)}}"""
+      }.mkString(""","wal_recoveries":[""", ",", "]")
+    Reply(200,
+      s"""{"buffered_rows":$rows""" +
+        s""","namespaces":$namespaces""" +
+        s""","result_cache_hits":${engine.resultCacheHits.get}""" +
+        annDrift + hwmJson + recovJson + "}")
   }
 
-  server.createContext("/api/v1/query", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseQuery(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, sql, fmt, asOf)) =>
-          try {
-            engine.query(ns, sql, asOf) match {
-              case Some(result) =>
-                respond(ex, 200, fmt match {
-                  case "json" => Sinks.toJson(result)
-                  case "csv" => Sinks.toCsv(result)
-                  case _ => Sinks.toTable(result)
-                })
-              case None => respond(ex, 404)
-            }
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
+  // a fenced namespace answers 422 + Retry-After (see Routes)
+  routes.post("/api/v1/write", Json.parseWriteBatch) {
+    case Seq(w) => engine.write(w); Reply(200)
+    case ws => engine.writeBatch(ws); Reply(200)
+  }
+
+  routes.post("/api/v1/query", Json.parseQuery) {
+    case (ns, sql, fmt, asOf) =>
+      engine.query(ns, sql, asOf) match {
+        case Some(result) =>
+          Reply(200, fmt match {
+            case "json" => Sinks.toJson(result)
+            case "csv" => Sinks.toCsv(result)
+            case _ => Sinks.toTable(result)
+          })
+        case None => Reply(404)
       }
-    }
-  })
+  }
 
   // admin: flush the RAM tail to the tier and truncate the WAL
   // (no-op engine-side without a configured tier)
-  server.createContext("/api/v1/admin/checkpoint", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else try {
-      engine.checkpoint()
-      respond(ex, 200)
-    } catch {
-      case e: Exception =>
-        System.err.println(e)
-        respond(ex, 500)
-    }
-  })
+  routes.post("/api/v1/admin/checkpoint", _ => ()) { _ =>
+    engine.checkpoint()
+    Reply(200)
+  }
 
   // admin: rewrite a table's tier files (one per day, optionally
   // clustered on tag columns for row-group pruning)
-  server.createContext("/api/v1/admin/compact", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseCompact(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, clusterBy)) =>
-          try {
-            engine.compact(ns, table, clusterBy)
-            respond(ex, 200)
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
+  routes.post("/api/v1/admin/compact", Json.parseCompact) {
+    case (ns, table, clusterBy) =>
+      engine.compact(ns, table, clusterBy)
+      Reply(200)
+  }
 
   // maintained rollup: count + exact-decimal sum per group over the
   // tiered table, served incrementally (only unseen segments are
   // aggregated — see graft.engine.RollupStore). 404 when the engine
   // has no tier (nothing immutable to maintain against).
-  server.createContext("/api/v1/rollup", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseRollup(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, group, value)) =>
-          engine.rollups match {
-            case None => respond(ex, 404)
-            case Some(store) =>
-              try {
-                val rows = store.rollup(ns, table, group, value)
-                  .map { case (g, c, s) =>
-                    // group values are arbitrary tag strings —
-                    // control characters included — so route through
-                    // the sink escaper, not a hand-rolled replace()
-                    val gj = g.map(Sinks.jsonString).getOrElse("null")
-                    s"""{"group":$gj,"count":$c,"sum":$s}"""
-                  }.mkString("[", ",", "]")
-                respond(ex, 200, rows)
-              } catch {
-                // cardinality-bound rejections carry the limit in the
-                // message — surface it as a client error, not a bare
-                // 500, so the caller learns the contract
-                case e: IllegalArgumentException =>
-                  respond(ex, 422, s"""{"error":${
-                    Sinks.jsonString(e.getMessage)}}""")
-                case e: Exception =>
-                  System.err.println(e)
-                  respond(ex, 500)
-              }
-          }
+  // Cardinality-bound rejections carry the limit in the message, so
+  // the caller learns the contract from a 422.
+  routes.post("/api/v1/rollup", Json.parseRollup, ArgumentContract) {
+    case (ns, table, group, value) =>
+      engine.rollups match {
+        case None => Reply(404)
+        case Some(store) =>
+          Reply(200, store.rollup(ns, table, group, value)
+            .map { case (g, c, s) =>
+              // group values are arbitrary tag strings — control
+              // characters included — so route through the sink
+              // escaper, not a hand-rolled replace()
+              val gj = g.map(Sinks.jsonString).getOrElse("null")
+              s"""{"group":$gj,"count":$c,"sum":$s}"""
+            }.mkString("[", ",", "]"))
       }
-    }
-  })
+  }
 
   // ANN top-k over a built IVF index (see graft.engine.AnnStore):
   // POST {index, vector, k?, nprobe?, labels?} →
@@ -495,271 +386,127 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
   // Builds are engine-side only — an HTTP-triggered build would read
   // an arbitrary host parquet path on behalf of an untrusted caller
   // (the runSQLOnFiles=false rationale). 404 when the engine has no
-  // tier or the index was never built.
-  server.createContext("/api/v1/ann", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseAnn(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((name, vec, k, nprobe, labels)) =>
-          engine.ann match {
-            case None => respond(ex, 404)
-            case Some(store) =>
-              try store.query(name, vec, k, nprobe, labels) match {
-                case None => respond(ex, 404)
-                case Some(hits) =>
-                  val body = hits.map { case (id, cos) =>
-                    s"""{"vec_id":$id,"cos":$cos}"""
-                  }.mkString("[", ",", "]")
-                  respond(ex, 200, body)
-              } catch {
-                // dimension/bounds violations carry the contract in
-                // the message — client error, not a bare 500
-                case e: IllegalArgumentException =>
-                  respond(ex, 422, s"""{"error":${
-                    Sinks.jsonString(e.getMessage)}}""")
-                case e: Exception =>
-                  System.err.println(e)
-                  respond(ex, 500)
-              }
-          }
+  // tier or the index was never built; a dimension or bounds
+  // violation is a 422.
+  routes.post("/api/v1/ann", Json.parseAnn, ArgumentContract) {
+    case (name, vec, k, nprobe, labels) =>
+      engine.ann.flatMap(_.query(name, vec, k, nprobe, labels)) match {
+        case None => Reply(404)
+        case Some(hits) =>
+          Reply(200, hits.map { case (id, cos) =>
+            s"""{"vec_id":$id,"cos":$cos}"""
+          }.mkString("[", ",", "]"))
       }
-    }
-  })
+  }
 
   // per-file value-bloom index maintenance (see graft.engine.
   // BloomStore): POST {namespace, table, column} builds/refreshes the
   // bloom index for the table's current manifest; subsequent queries
   // with `column = 'literal'` predicates skip files whose blooms
   // exclude the literal. Returns the newly indexed file count and the
-  // table's indexed columns. 404 when the engine has no tier.
-  server.createContext("/api/v1/bloom", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseBloom(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, column)) =>
-          engine.valueBlooms match {
-            case None => respond(ex, 404)
-            case Some(store) =>
-              try {
-                val n = store.index(ns, table, column)
-                val cols = store.indexedColumns(ns, table)
-                  .toSeq.sorted.map(Sinks.jsonString).mkString(",")
-                respond(ex, 200,
-                  s"""{"indexed":$n,"columns":[$cols]}""")
-              } catch {
-                // type/identifier rejections carry the contract in
-                // the message — client error, not a bare 500
-                case e: IllegalArgumentException =>
-                  respond(ex, 422, s"""{"error":${
-                    Sinks.jsonString(e.getMessage)}}""")
-                case e: Exception =>
-                  System.err.println(e)
-                  respond(ex, 500)
-              }
-          }
+  // table's indexed columns. 404 when the engine has no tier; a type
+  // or identifier rejection is a 422.
+  routes.post("/api/v1/bloom", Json.parseBloom, ArgumentContract) {
+    case (ns, table, column) =>
+      engine.valueBlooms match {
+        case None => Reply(404)
+        case Some(store) =>
+          val n = store.index(ns, table, column)
+          val cols = store.indexedColumns(ns, table)
+            .toSeq.sorted.map(Sinks.jsonString).mkString(",")
+          Reply(200, s"""{"indexed":$n,"columns":[$cols]}""")
       }
-    }
-  })
+  }
 
   // admin: list a table's published manifest versions (oldest first)
   // with file counts — how a client discovers the `version` values the
   // query endpoint's time-travel parameter accepts
-  server.createContext("/api/v1/admin/versions", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseCompact(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, _)) =>
-          try {
-            val vs = engine.tierVersions(ns, table)
-              .map { case (v, n) => s"""{"version":$v,"files":$n}""" }
-              .mkString("[", ",", "]")
-            respond(ex, 200, vs)
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
+  routes.post("/api/v1/admin/versions", Json.parseCompact) {
+    case (ns, table, _) =>
+      Reply(200, engine.tierVersions(ns, table)
+        .map { case (v, n) => s"""{"version":$v,"files":$n}""" }
+        .mkString("[", ",", "]"))
+  }
 
   // admin: retention — age out day partitions older than before_day
   // (exclusive); reports how many data files the manifest dropped
-  server.createContext("/api/v1/admin/expire", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseExpire(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, day)) =>
-          try {
-            val dropped = engine.expire(ns, table, day)
-            respond(ex, 200, s"""{"dropped_files":$dropped}""")
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
+  routes.post("/api/v1/admin/expire", Json.parseExpire) {
+    case (ns, table, day) =>
+      Reply(200, s"""{"dropped_files":${engine.expire(ns, table, day)}}""")
+  }
 
   // admin: write-fence a namespace (the migration drain barrier) /
   // lift it. Fencing is idempotent and durable across restarts.
-  server.createContext("/api/v1/admin/fence", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else handleNamespaceToggle(ex, engine.fence)
-  })
-  server.createContext("/api/v1/admin/unfence", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else handleNamespaceToggle(ex, engine.unfence)
-  })
-
-  private def handleNamespaceToggle(ex: HttpExchange,
-      f: String => Unit): Unit = {
-    val parsed =
-      try Right(Json.parseNamespace(ex.getRequestBody.readAllBytes()))
-      catch { case e: Exception => Left(e) }
-    parsed match {
-      case Left(e) =>
-        System.err.println(e)
-        respond(ex, 422)
-      case Right(ns) =>
-        try { f(ns); respond(ex, 200) }
-        catch {
-          case e: Exception =>
-            System.err.println(e)
-            respond(ex, 500)
-        }
-    }
+  routes.post("/api/v1/admin/fence", Json.parseNamespace) { ns =>
+    engine.fence(ns)
+    Reply(200)
+  }
+  routes.post("/api/v1/admin/unfence", Json.parseNamespace) { ns =>
+    engine.unfence(ns)
+    Reply(200)
   }
 
   // admin: snapshot export/import through the EXCHANGE DIR — the
   // shared-storage handoff area of backup/restore and namespace
-  // migration. Only registered when the operator configured one
+  // migration. Only served when the operator configured one
   // (LYNX_EXCHANGE_DIR): the snapshot id is identifier-restricted
   // and resolves strictly under that root, so the HTTP plane can
   // never read or write an arbitrary host path (the ANN-build /
-  // runSQLOnFiles security stance). 404 without the config.
-  private def snapshotEndpoint(ex: HttpExchange)(
+  // runSQLOnFiles security stance). 404 without the config, before
+  // the body is read.
+  private def snapshotRoute(path: String)(
       handle: (String, File, Option[String], Option[Long]) => String)
       : Unit =
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else exchangeDir match {
-      case None => respond(ex, 404)
-      case Some(root) =>
-        val parsed =
-          try Right(Json.parseSnapshot(ex.getRequestBody.readAllBytes()))
-          catch { case e: Exception => Left(e) }
-        parsed match {
-          case Left(e) =>
-            System.err.println(e)
-            respond(ex, 422)
-          case Right((ns, snap, table, version)) =>
-            try respond(ex, 200,
-              handle(ns, new File(root, snap), table, version))
-            catch {
-              case e: IllegalArgumentException =>
-                respond(ex, 422, s"""{"error":${
-                  Sinks.jsonString(e.getMessage)}}""")
-              case e: Exception =>
-                System.err.println(e)
-                respond(ex, 500, s"""{"error":${
-                  Sinks.jsonString(String.valueOf(e.getMessage))}}""")
-            }
-        }
+    routes.post(path,
+      body => exchangeDir.map(root => (root, Json.parseSnapshot(body))),
+      Explained) {
+      case None => Reply(404)
+      case Some((root, (ns, snap, table, version))) =>
+        Reply(200, handle(ns, new File(root, snap), table, version))
     }
 
-  server.createContext("/api/v1/admin/export", (ex: HttpExchange) =>
-    snapshotEndpoint(ex) { (ns, dest, table, version) =>
-      table match {
-        case Some(t) =>
-          val n = engine.exportSnapshot(ns, t, version, dest)
-          s"""[{"table":${Sinks.jsonString(t)},"files":$n}]"""
-        case None =>
-          engine.exportNamespace(ns, dest).map { case (t, n) =>
-            s"""{"table":${Sinks.jsonString(t)},"files":$n}"""
-          }.mkString("[", ",", "]")
-      }
-    })
+  snapshotRoute("/api/v1/admin/export") { (ns, dest, table, version) =>
+    table match {
+      case Some(t) =>
+        val n = engine.exportSnapshot(ns, t, version, dest)
+        s"""[{"table":${Sinks.jsonString(t)},"files":$n}]"""
+      case None =>
+        engine.exportNamespace(ns, dest).map { case (t, n) =>
+          s"""{"table":${Sinks.jsonString(t)},"files":$n}"""
+        }.mkString("[", ",", "]")
+    }
+  }
 
-  server.createContext("/api/v1/admin/import", (ex: HttpExchange) =>
-    snapshotEndpoint(ex) { (ns, src, table, _) =>
-      table match {
-        case Some(t) =>
-          val v = engine.importSnapshot(ns, t, src)
-          s"""[{"table":${Sinks.jsonString(t)},"version":$v}]"""
-        case None =>
-          engine.importNamespace(ns, src).map { case (t, v) =>
-            s"""{"table":${Sinks.jsonString(t)},"version":$v}"""
-          }.mkString("[", ",", "]")
-      }
-    })
+  snapshotRoute("/api/v1/admin/import") { (ns, src, table, _) =>
+    table match {
+      case Some(t) =>
+        val v = engine.importSnapshot(ns, t, src)
+        s"""[{"table":${Sinks.jsonString(t)},"version":$v}]"""
+      case None =>
+        engine.importNamespace(ns, src).map { case (t, v) =>
+          s"""{"table":${Sinks.jsonString(t)},"version":$v}"""
+        }.mkString("[", ",", "]")
+    }
+  }
 
   // admin: reclaim an exchange-dir snapshot (the migration driver
   // calls this after a successful flip or a failed attempt — without
   // it every migration leaves a full namespace copy on the shared
   // storage forever). Same identifier-under-the-exchange-root
-  // discipline as export/import; 404 without the config.
-  server.createContext("/api/v1/admin/dropsnapshot", (ex: HttpExchange) =>
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else exchangeDir match {
-      case None => respond(ex, 404)
-      case Some(root) =>
-        val parsed = try {
-          val n = new ObjectMapper()
-            .readTree(ex.getRequestBody.readAllBytes())
-          require(n.hasNonNull("snapshot"), "missing required field")
-          val snap = n.get("snapshot").asText()
-          require(snap.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
-            !snap.contains(".."), "snapshot must be a bare identifier")
-          Right(snap)
-        } catch { case e: Exception => Left(e) }
-        parsed match {
-          case Left(e) =>
-            System.err.println(e)
-            respond(ex, 422)
-          case Right(snap) =>
-            def rm(f: File): Unit = {
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-              f.delete()
-              ()
-            }
-            val dir = new File(root, snap)
-            val existed = dir.exists()
-            if (existed) rm(dir)
-            respond(ex, 200, s"""{"dropped":$existed}""")
-        }
-    })
-
-  def start(): Unit = server.start()
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdown()
+  // discipline as export/import; 404 without the config. A symlink
+  // inside the snapshot is removed, never followed.
+  routes.post("/api/v1/admin/dropsnapshot",
+      body => exchangeDir.map(new File(_, Json.parseSnapshotId(body)))) {
+    case None => Reply(404)
+    case Some(dir) =>
+      val existed = dir.exists()
+      if (existed) ParquetTier.deleteTree(dir)
+      Reply(200, s"""{"dropped":$existed}""")
   }
-  def boundPort: Int = server.getAddress.getPort
+
+  def start(): Unit = routes.start()
+  def stop(): Unit = routes.stop()
+  def boundPort: Int = routes.boundPort
 }
 
 /** Entry point; env config mirrors the reference (main.rs:19-29):
@@ -831,11 +578,7 @@ object LynxServerMain {
       annPlacement = for {
         selfName <- sys.env.get("LYNX_SHARD_SELF")
         table <- sys.env.get("LYNX_SHARDS")
-        parsed = table.split(",").toSeq.map(_.trim)
-          .filter(_.nonEmpty).map { s =>
-            val Array(name, url) = s.split("=", 2)
-            (name, url)
-          }
+        parsed = ShardRouter.parseShards(table)
         if parsed.nonEmpty
       } yield (selfName, parsed))
     // LYNX_EXCHANGE_DIR: shared-storage handoff root for snapshot

@@ -1,10 +1,10 @@
 package graft.http
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+
+import graft.engine.Sinks
 
 /** Namespace-sharding HTTP router — the SERVING layer of the engine's
   * documented horizontal-scale story. One engine's write plane (WAL +
@@ -65,11 +65,9 @@ final class ShardRouter(host: String, port: Int,
     "shard names must be unique")
 
   private val mapper = new ObjectMapper
-  private val server =
-    HttpServer.create(new InetSocketAddress(host, port), 0)
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(
-    math.max(8, Runtime.getRuntime.availableProcessors()))
-  server.setExecutor(pool)
+  // every rejection names its reason: a client of the router cannot
+  // otherwise tell a bad body from a cross-shard batch
+  private val routes = new Routes(host, port, explainBadBodies = true)
 
   /** The owning (shardName, baseUrl) for a routing key — the
     * q_shard_rendezvous argmax, verbatim: highest md5 hex string of
@@ -111,19 +109,22 @@ final class ShardRouter(host: String, port: Int,
   private def persistOverrides(): Unit = stateFile.foreach { f0 =>
     val f = f0.getAbsoluteFile // a bare relative name has no parent
     Option(f.getParentFile).foreach(_.mkdirs())
-    val json = overrides.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${graft.engine.Sinks.jsonString(k)}:${
-        graft.engine.Sinks.jsonString(v)}"
-    }.mkString("{", ",", "}")
     val tmp = new java.io.File(f.getParentFile,
       "." + f.getName + ".tmp")
     java.nio.file.Files.write(tmp.toPath,
-      json.getBytes(UTF_8))
+      overridesJson.getBytes(UTF_8))
     java.nio.file.Files.move(tmp.toPath, f.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()
   }
+
+  /** The override map as one JSON object, keys sorted. */
+  private def overridesJson: String =
+    overrides.toSeq.sortBy(_._1).map { case (k, v) =>
+      s"${Sinks.jsonString(k)}:${Sinks.jsonString(v)}"
+    }.mkString("{", ",", "}")
+
   // one migration at a time: two concurrent moves of one namespace
   // (or a shared exchange-dir id collision) must be impossible
   private val migrateLock = new Object
@@ -138,14 +139,6 @@ final class ShardRouter(host: String, port: Int,
 
   /** Current migration overrides (observability + specs). */
   def ownerOverrides: Map[String, String] = overrides.toMap
-
-  private def respond(ex: HttpExchange, code: Int,
-      body: String = ""): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
-    if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
-    ex.close()
-  }
 
   /** Forward `body` as a POST to `baseUrl + path`; returns
     * (status, responseBody, relayedResponseHeaders). Connection
@@ -184,19 +177,6 @@ final class ShardRouter(host: String, port: Int,
       Some((code, respBody, relayed))
     } catch { case _: java.io.IOException => None }
 
-  /** The inbound request's Content-Type header, if any. */
-  private def requestContentType(ex: HttpExchange): Option[String] =
-    Option(ex.getRequestHeaders.getFirst("Content-Type"))
-
-  /** Relay a backend response (status, body, headers) verbatim. */
-  private def relay(ex: HttpExchange, code: Int, resp: Array[Byte],
-      headers: Map[String, String]): Unit = {
-    headers.foreach { case (h, v) => ex.getResponseHeaders.set(h, v) }
-    ex.sendResponseHeaders(code, if (resp.isEmpty) -1 else resp.length)
-    if (resp.nonEmpty) ex.getResponseBody.write(resp)
-    ex.close()
-  }
-
   private def probeHealth(baseUrl: String): Boolean =
     try {
       val conn = java.net.URI.create(baseUrl + "/health").toURL
@@ -227,120 +207,74 @@ final class ShardRouter(host: String, port: Int,
     }
   }
 
-  /** Route a namespace-carrying request to its owner and relay the
-    * backend's response verbatim.
+  /** Forward-and-relay: `ownerOf` reads the routing key from the body
+    * and resolves its owner (a throw is a 422 naming the reason); the
+    * body goes verbatim, with the client's Content-Type, to the owner
+    * and the backend's response comes back unchanged — 502 when the
+    * owner is unreachable.
     */
-  private def routeByNamespace(path: String)(ex: HttpExchange): Unit =
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
+  private def relayRoute(path: String)(
+      ownerOf: Array[Byte] => (String, String)): Unit =
+    routes.route(path, post = true, ex => {
       val body = ex.getRequestBody.readAllBytes()
-      val routed =
-        try Right {
-          val nss = namespacesOf(body)
-          val owners = nss.map(owner).distinct
-          require(owners.size == 1,
-            s"batch spans ${owners.size} shards (namespaces " +
-              s"${nss.distinct.mkString(", ")}); split write batches " +
-              "by namespace so each lands on one shard atomically")
-          owners.head
-        } catch { case e: Exception => Left(e) }
-      routed match {
-        case Left(e) =>
-          respond(ex, 422, s"""{"error":${
-            graft.engine.Sinks.jsonString(e.getMessage)}}""")
-        case Right((shard, url)) =>
-          forward(url, path, body, requestContentType(ex)) match {
-            case Some((code, resp, ct)) =>
-              relay(ex, code, resp, ct)
-            case None =>
-              respond(ex, 502, s"""{"error":"shard '$shard' ($url) """ +
-                """unreachable"}""")
-          }
+      (ownerOf(body), body,
+        Option(ex.getRequestHeaders.getFirst("Content-Type")))
+    }, Routes.ServerFault) { case ((shard, url), body, contentType) =>
+      forward(url, path, body, contentType) match {
+        case Some((code, resp, headers)) => new Reply(code, resp, headers)
+        case None =>
+          Reply.error(502, s"shard '$shard' ($url) unreachable")
       }
     }
 
   Seq("/api/v1/write", "/api/v1/query", "/api/v1/rollup",
     "/api/v1/bloom", "/api/v1/admin/compact", "/api/v1/admin/expire",
     "/api/v1/admin/versions").foreach { path =>
-    server.createContext(path,
-      (ex: HttpExchange) => routeByNamespace(path)(ex))
+    relayRoute(path) { body =>
+      val nss = namespacesOf(body)
+      val owners = nss.map(owner).distinct
+      require(owners.size == 1,
+        s"batch spans ${owners.size} shards (namespaces " +
+          s"${nss.distinct.mkString(", ")}); split write batches " +
+          "by namespace so each lands on one shard atomically")
+      owners.head
+    }
   }
 
   // ANN serving routes by index name (prefixed so an index named like
   // a namespace cannot alias its placement)
-  server.createContext("/api/v1/ann", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val body = ex.getRequestBody.readAllBytes()
-      val routed =
-        try {
-          val n = mapper.readTree(body)
-          require(n.hasNonNull("index"), "missing required field")
-          Right(owner("ann:" + n.get("index").asText()))
-        } catch { case e: Exception => Left(e) }
-      routed match {
-        case Left(e) =>
-          respond(ex, 422, s"""{"error":${
-            graft.engine.Sinks.jsonString(e.getMessage)}}""")
-        case Right((shard, url)) =>
-          forward(url, "/api/v1/ann", body,
-            requestContentType(ex)) match {
-            case Some((code, resp, ct)) =>
-              relay(ex, code, resp, ct)
-            case None =>
-              respond(ex, 502, s"""{"error":"shard '$shard' ($url) """ +
-                """unreachable"}""")
-          }
-      }
-    }
-  })
+  relayRoute("/api/v1/ann") { body =>
+    val n = mapper.readTree(body)
+    require(n.hasNonNull("index"), "missing required field")
+    owner("ann:" + n.get("index").asText())
+  }
 
   // checkpoint is engine-wide, not namespace-scoped: broadcast
-  server.createContext("/api/v1/admin/checkpoint", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val body = ex.getRequestBody.readAllBytes()
-      val results = shards.map { case (name, url) =>
-        name -> forward(url, "/api/v1/admin/checkpoint", body)
-      }
-      val failed = results.collect {
-        case (name, None) => name
-        case (name, Some((code, _, _))) if code != 200 => name
-      }
-      if (failed.isEmpty) respond(ex, 200)
-      else respond(ex, 502, s"""{"failed":[${
-        failed.map(graft.engine.Sinks.jsonString).mkString(",")}]}""")
+  routes.post("/api/v1/admin/checkpoint", body => body) { body =>
+    val results = shards.map { case (name, url) =>
+      name -> forward(url, "/api/v1/admin/checkpoint", body)
     }
-  })
+    val failed = results.collect {
+      case (name, None) => name
+      case (name, Some((code, _, _))) if code != 200 => name
+    }
+    if (failed.isEmpty) Reply(200)
+    else Reply(502, s"""{"failed":[${
+      failed.map(Sinks.jsonString).mkString(",")}]}""")
+  }
 
   // placement probe: {key} (or {namespace}) → the owning shard —
   // the ops call behind the documented add-a-shard procedure
-  server.createContext("/api/v1/shard", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try {
-          val n = mapper.readTree(ex.getRequestBody.readAllBytes())
-          val k =
-            if (n.hasNonNull("key")) n.get("key").asText()
-            else if (n.hasNonNull("namespace")) n.get("namespace").asText()
-            else throw new IllegalArgumentException(
-              "missing required field")
-          Right(k)
-        } catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          respond(ex, 422, s"""{"error":${
-            graft.engine.Sinks.jsonString(e.getMessage)}}""")
-        case Right(key) =>
-          val (shard, url) = owner(key)
-          respond(ex, 200, s"""{"shard":${
-            graft.engine.Sinks.jsonString(shard)},"url":${
-            graft.engine.Sinks.jsonString(url)},"overridden":${
-            overrides.contains(key)}}""")
-      }
-    }
-  })
+  routes.post("/api/v1/shard", body => {
+    val n = mapper.readTree(body)
+    if (n.hasNonNull("key")) n.get("key").asText()
+    else if (n.hasNonNull("namespace")) n.get("namespace").asText()
+    else throw new IllegalArgumentException("missing required field")
+  }) { key =>
+    val (shard, url) = owner(key)
+    Reply(200, s"""{"shard":${Sinks.jsonString(shard)},"url":${
+      Sinks.jsonString(url)},"overridden":${overrides.contains(key)}}""")
+  }
 
   // MECHANIZED namespace migration — the documented add-a-shard
   // procedure's step 3 as one endpoint instead of a human copying
@@ -362,142 +296,118 @@ final class ShardRouter(host: String, port: Int,
   // unchanged — a write never lands on both shards (fence precedes
   // copy, flip follows it) and never vanishes (422 is retryable).
   // Requires both engines to share LYNX_EXCHANGE_DIR storage.
-  server.createContext("/api/v1/admin/migrate", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try {
-          val n = mapper.readTree(ex.getRequestBody.readAllBytes())
-          require(n.hasNonNull("namespace") && n.hasNonNull("to"),
-            "missing required field")
-          Right((n.get("namespace").asText(), n.get("to").asText()))
-        } catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          respond(ex, 422, s"""{"error":${
-            graft.engine.Sinks.jsonString(e.getMessage)}}""")
-        case Right((ns, to)) => migrateLock.synchronized {
-          shards.find(_._1 == to) match {
-            case None =>
-              respond(ex, 422, s"""{"error":"unknown target shard """ +
-                s"""'$to'"}""")
-            case Some((_, toUrl)) =>
-              val (fromName, fromUrl) = owner(ns)
-              if (fromName == to)
-                respond(ex, 200, s"""{"moved":false,"owner":${
-                  graft.engine.Sinks.jsonString(to)}}""")
-              else {
-                val nsJson = graft.engine.Sinks.jsonString(ns)
-                val snap = "mig-" + ShardRouter.md5Hex(ns).take(12) +
-                  "-" + System.currentTimeMillis
-                val fenceBody =
-                  s"""{"namespace":$nsJson}""".getBytes(UTF_8)
-                val snapBody = (s"""{"namespace":$nsJson,""" +
-                  s""""snapshot":"$snap"}""").getBytes(UTF_8)
-                def ok(r: Option[(Int, Array[Byte],
-                    Map[String, String])]): Boolean =
-                  r.exists(_._1 == 200)
-                def bodyOf(r: Option[(Int, Array[Byte],
-                    Map[String, String])]): String =
-                  r.map(x => new String(x._2, UTF_8))
-                    .getOrElse("unreachable")
-                // rollback lifts the fence AND reclaims any partial
-                // snapshot; both are best-effort but their outcome is
-                // REPORTED honestly — telling the operator "fence
-                // lifted" while the durable marker survived a dead
-                // owner would leave the namespace silently refusing
-                // writes with nobody told to act
-                def rollback(): Boolean = {
-                  forward(fromUrl, "/api/v1/admin/dropsnapshot",
-                    (s"""{"snapshot":"$snap"}""").getBytes(UTF_8))
-                  ok(forward(fromUrl, "/api/v1/admin/unfence",
-                    fenceBody))
-                }
-                val fenced =
-                  ok(forward(fromUrl, "/api/v1/admin/fence", fenceBody))
-                if (!fenced)
-                  respond(ex, 502, s"""{"error":"cannot fence $ns """ +
-                    s"""on '$fromName'"}""")
-                else {
-                  val ckpt = forward(fromUrl,
-                    "/api/v1/admin/checkpoint", Array.empty)
-                  val exp = if (ok(ckpt))
-                    forward(fromUrl, "/api/v1/admin/export", snapBody)
-                  else None
-                  val imp = if (ok(exp))
-                    forward(toUrl, "/api/v1/admin/import", snapBody)
-                  else None
-                  if (!ok(ckpt) || !ok(exp) || !ok(imp)) {
-                    val unfenced = rollback()
-                    val fenceState =
-                      if (unfenced) "fence lifted"
-                      else "UNFENCE FAILED - the durable fence is " +
-                        s"still on '$fromName'; lift it manually " +
-                        "(POST /api/v1/admin/unfence) once the " +
-                        "shard is reachable"
-                    val stage =
-                      if (!ok(ckpt)) ("checkpoint", bodyOf(ckpt))
-                      else if (!ok(exp)) ("export", bodyOf(exp))
-                      else ("import", bodyOf(imp))
-                    respond(ex, 502, s"""{"error":"migration """ +
-                      s"""${stage._1} failed (ownership unchanged; """ +
-                      s"""$fenceState)","detail":${
-                        graft.engine.Sinks.jsonString(stage._2)}}""")
-                  } else {
-                    // commit point: route to the new owner from here
-                    // (persisted BEFORE the response — a router that
-                    // acked a migration must re-route after restart)
-                    overrides.put(ns, to)
-                    persistOverrides()
-                    // the snapshot did its job — reclaim the copy on
-                    // the shared exchange storage (best-effort; the
-                    // target engine shares the dir by construction)
-                    forward(toUrl, "/api/v1/admin/dropsnapshot",
-                      (s"""{"snapshot":"$snap"}""").getBytes(UTF_8))
-                    respond(ex, 200, s"""{"moved":true,"from":${
-                      graft.engine.Sinks.jsonString(fromName)
-                      },"to":${graft.engine.Sinks.jsonString(to)
-                      },"snapshot":"$snap","tables":${
-                      bodyOf(imp)}}""")
-                  }
-                }
-              }
+  routes.post("/api/v1/admin/migrate", body => {
+    val n = mapper.readTree(body)
+    require(n.hasNonNull("namespace") && n.hasNonNull("to"),
+      "missing required field")
+    (n.get("namespace").asText(), n.get("to").asText())
+  }) { case (ns, to) => migrateLock.synchronized {
+    shards.find(_._1 == to) match {
+      case None =>
+        Reply.error(422, s"unknown target shard '$to'")
+      case Some((_, toUrl)) =>
+        val (fromName, fromUrl) = owner(ns)
+        if (fromName == to)
+          Reply(200, s"""{"moved":false,"owner":${Sinks.jsonString(to)}}""")
+        else {
+          val nsJson = Sinks.jsonString(ns)
+          val snap = "mig-" + ShardRouter.md5Hex(ns).take(12) +
+            "-" + System.currentTimeMillis
+          val fenceBody =
+            s"""{"namespace":$nsJson}""".getBytes(UTF_8)
+          val snapBody = (s"""{"namespace":$nsJson,""" +
+            s""""snapshot":"$snap"}""").getBytes(UTF_8)
+          def ok(r: Option[(Int, Array[Byte],
+              Map[String, String])]): Boolean =
+            r.exists(_._1 == 200)
+          def bodyOf(r: Option[(Int, Array[Byte],
+              Map[String, String])]): String =
+            r.map(x => new String(x._2, UTF_8))
+              .getOrElse("unreachable")
+          // rollback lifts the fence AND reclaims any partial
+          // snapshot; both are best-effort but their outcome is
+          // REPORTED honestly — telling the operator "fence
+          // lifted" while the durable marker survived a dead
+          // owner would leave the namespace silently refusing
+          // writes with nobody told to act
+          def rollback(): Boolean = {
+            forward(fromUrl, "/api/v1/admin/dropsnapshot",
+              (s"""{"snapshot":"$snap"}""").getBytes(UTF_8))
+            ok(forward(fromUrl, "/api/v1/admin/unfence",
+              fenceBody))
+          }
+          val fenced =
+            ok(forward(fromUrl, "/api/v1/admin/fence", fenceBody))
+          if (!fenced)
+            Reply.error(502, s"cannot fence $ns on '$fromName'")
+          else {
+            val ckpt = forward(fromUrl,
+              "/api/v1/admin/checkpoint", Array.empty)
+            val exp = if (ok(ckpt))
+              forward(fromUrl, "/api/v1/admin/export", snapBody)
+            else None
+            val imp = if (ok(exp))
+              forward(toUrl, "/api/v1/admin/import", snapBody)
+            else None
+            if (!ok(ckpt) || !ok(exp) || !ok(imp)) {
+              val unfenced = rollback()
+              val fenceState =
+                if (unfenced) "fence lifted"
+                else "UNFENCE FAILED - the durable fence is " +
+                  s"still on '$fromName'; lift it manually " +
+                  "(POST /api/v1/admin/unfence) once the " +
+                  "shard is reachable"
+              val stage =
+                if (!ok(ckpt)) ("checkpoint", bodyOf(ckpt))
+                else if (!ok(exp)) ("export", bodyOf(exp))
+                else ("import", bodyOf(imp))
+              Reply(502, s"""{"error":"migration """ +
+                s"""${stage._1} failed (ownership unchanged; """ +
+                s"""$fenceState)","detail":${
+                  Sinks.jsonString(stage._2)}}""")
+            } else {
+              // commit point: route to the new owner from here
+              // (persisted BEFORE the response — a router that
+              // acked a migration must re-route after restart)
+              overrides.put(ns, to)
+              persistOverrides()
+              // the snapshot did its job — reclaim the copy on
+              // the shared exchange storage (best-effort; the
+              // target engine shares the dir by construction)
+              forward(toUrl, "/api/v1/admin/dropsnapshot",
+                (s"""{"snapshot":"$snap"}""").getBytes(UTF_8))
+              Reply(200, s"""{"moved":true,"from":${
+                Sinks.jsonString(fromName)},"to":${Sinks.jsonString(to)
+                },"snapshot":"$snap","tables":${bodyOf(imp)}}""")
+            }
           }
         }
-      }
     }
-  })
+  }}
 
-  server.createContext("/health", (ex: HttpExchange) => {
+  routes.any("/health") {
     val states = shards.map { case (name, url) =>
       name -> probeHealth(url)
     }
     val body = states.map { case (n, ok) =>
-      s"${graft.engine.Sinks.jsonString(n)}:$ok"
+      s"${Sinks.jsonString(n)}:$ok"
     }.mkString("{\"shards\":{", ",", "}}")
-    respond(ex, if (states.forall(_._2)) 200 else 503, body)
-  })
+    Reply(if (states.forall(_._2)) 200 else 503, body)
+  }
 
-  server.createContext("/metrics", (ex: HttpExchange) => {
+  routes.any("/metrics") {
     val states = shards.map { case (name, url) =>
-      s"""{"shard":${graft.engine.Sinks.jsonString(name)},"url":${
-        graft.engine.Sinks.jsonString(url)},"healthy":${
+      s"""{"shard":${Sinks.jsonString(name)},"url":${
+        Sinks.jsonString(url)},"healthy":${
         probeHealth(url)}}"""
     }
-    val ovr = overrides.toSeq.sortBy(_._1).map { case (k, n) =>
-      s"${graft.engine.Sinks.jsonString(k)}:${
-        graft.engine.Sinks.jsonString(n)}"
-    }.mkString("{", ",", "}")
-    respond(ex, 200, s"""{"shards":${
-      states.mkString("[", ",", "]")},"overrides":$ovr}""")
-  })
-
-  def start(): Unit = server.start()
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdown()
+    Reply(200, s"""{"shards":${
+      states.mkString("[", ",", "]")},"overrides":$overridesJson}""")
   }
-  def boundPort: Int = server.getAddress.getPort
+
+  def start(): Unit = routes.start()
+  def stop(): Unit = routes.stop()
+  def boundPort: Int = routes.boundPort
 }
 
 object ShardRouter {
@@ -511,6 +421,13 @@ object ShardRouter {
   def shardFor(key: String,
       shards: Seq[(String, String)]): (String, String) =
     shards.maxBy { case (name, _) => md5Hex(s"$key:$name") }
+
+  /** A shard table from `name=url,…` (LYNX_SHARDS). */
+  def parseShards(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { s =>
+      val Array(name, url) = s.split("=", 2)
+      (name, url)
+    }
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -529,12 +446,7 @@ object ShardRouterMain {
   def main(args: Array[String]): Unit = {
     val addr = sys.env.getOrElse("LYNX_ROUTER_ADDR", "127.0.0.1:3100")
     val Array(host, port) = addr.split(":", 2)
-    val shards = sys.env.getOrElse("LYNX_SHARDS", "")
-      .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-      .map { s =>
-        val Array(name, url) = s.split("=", 2)
-        (name, url)
-      }
+    val shards = ShardRouter.parseShards(sys.env.getOrElse("LYNX_SHARDS", ""))
     val router = new ShardRouter(host, port.toInt, shards,
       stateFile = sys.env.get("LYNX_ROUTER_STATE")
         .map(new java.io.File(_)))

@@ -1,8 +1,9 @@
 package graft.tier
 
-import java.io.File
+import java.io.{File, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -128,11 +129,6 @@ final class ParquetTier(root: File,
 
   private def relativize(base: File, f: File): String =
     base.toPath.relativize(f.toPath).toString
-
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
 
   // ----------------------------------------------------------- manifest
 
@@ -501,7 +497,7 @@ final class ParquetTier(root: File,
           throw new IllegalStateException(s"publish: cannot move $src")
       }
     }
-    if (staging.exists()) deleteRecursively(staging)
+    if (staging.exists()) ParquetTier.deleteTree(staging)
     val current = readManifest(ns, table).getOrElse(Nil)
     val known = current.toSet
     val trashed = trashedFiles(ns, table)
@@ -524,7 +520,7 @@ final class ParquetTier(root: File,
       if t.isDirectory
       s <- Option(t.listFiles()).getOrElse(Array.empty)
       if s.isDirectory && s.getName.startsWith(".staging-")
-    } deleteRecursively(s)
+    } ParquetTier.deleteTree(s)
 
   // ------------------------------------------------------------ reading
 
@@ -739,7 +735,7 @@ final class ParquetTier(root: File,
         throw new IllegalStateException(s"manifest publish failed: $dst")
       pending.delete()
       version
-    } finally if (staging.exists()) deleteRecursively(staging)
+    } finally if (staging.exists()) ParquetTier.deleteTree(staging)
   }
 
   /** Streamed copy computing the source's CRC32 on the way through. */
@@ -853,7 +849,7 @@ final class ParquetTier(root: File,
       if (!new File(staging, rel).renameTo(dst))
         throw new IllegalStateException(s"compact: cannot publish $rel")
     }
-    deleteRecursively(staging)
+    ParquetTier.deleteTree(staging)
     // manifest flip is the commit point: a crash before it leaves the
     // old manifest current (new files are unreferenced garbage, never
     // double-read); after it, old files are trash with a grace period
@@ -884,6 +880,25 @@ object ParquetTier {
       case c => b.append(c)
     }
     b.append('"').toString
+  }
+
+  /** Best-effort recursive delete that never follows a symbolic link:
+    * a link (to a file or a directory) is removed itself and its
+    * target is left alone, so a link planted inside a staging dir or
+    * an exchange-dir snapshot cannot reach files outside it. Entries
+    * that cannot be deleted are skipped, as `File.delete` would.
+    */
+  def deleteTree(root: File): Unit = {
+    def rm(p: Path): FileVisitResult = {
+      try Files.deleteIfExists(p) catch { case _: IOException => }
+      FileVisitResult.CONTINUE
+    }
+    Files.walkFileTree(root.toPath, new SimpleFileVisitor[Path] {
+      override def visitFile(p: Path, a: BasicFileAttributes) = rm(p)
+      override def visitFileFailed(p: Path, e: IOException) =
+        FileVisitResult.CONTINUE
+      override def postVisitDirectory(p: Path, e: IOException) = rm(p)
+    })
   }
 
   /** Marker present while importSnapshot's file moves are in flight

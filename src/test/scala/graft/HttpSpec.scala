@@ -677,11 +677,11 @@ class HttpSpec extends AnyFunSuite {
             """"value":"2","timestamp":2}]"""), null, 422, true, true),
         Row("path-like namespace", true, s"$api/write",
           Some("""{"namespace":"a/b","measurement":"m","value":"1",""" +
-            """"timestamp":1}"""), null, 500, false, false),
+            """"timestamp":1}"""), null, 422, false, false),
         Row("batch with a path-like measurement", true, s"$api/write",
           Some("""[{"namespace":"ns","measurement":"m","value":"1",""" +
             """"timestamp":1},{"namespace":"ns","measurement":"..",""" +
-            """"value":"2","timestamp":2}]"""), null, 500, false, false))
+            """"value":"2","timestamp":2}]"""), null, 422, false, false))
 
     try {
       val failures = rows.flatMap { r =>
@@ -707,6 +707,65 @@ class HttpSpec extends AnyFunSuite {
     } finally {
       fullSrv.stop(); bareSrv.stop()
     }
+  }
+
+  test("a write naming a path-like namespace or measurement is a " +
+    "malformed body (422), single or in a batch, and writes nothing") {
+    val dir = Files.createTempDirectory("http-pathy").toFile
+    val engine = new LynxEngine(SparkFixture.spark, dir, 1024 * 1024)
+    val server = new LynxServer(engine, "127.0.0.1", 0)
+    server.start()
+    try {
+      val port = server.boundPort
+      for (ns <- Seq("a/b", "..", "a\\\\b")) {
+        val r = post(port, "/api/v1/write",
+          s"""{"namespace":"$ns","measurement":"m","value":"1",""" +
+            """"timestamp":1}""")
+        assert(r.statusCode() == 422, s"namespace $ns: ${r.statusCode()}")
+      }
+      val batch = post(port, "/api/v1/write",
+        """[{"namespace":"ns","measurement":"m","value":"1",""" +
+          """"timestamp":1},{"namespace":"ns","measurement":"..",""" +
+          """"value":"2","timestamp":2}]""")
+      assert(batch.statusCode() == 422)
+      assert(engine.buffer.rowCounts.isEmpty,
+        s"rejected writes left rows: ${engine.buffer.rowCounts}")
+      assert(post(port, "/api/v1/query",
+        """{"namespace":"ns","query":"SELECT * FROM m"}""")
+        .statusCode() == 404)
+    } finally server.stop()
+  }
+
+  test("dropsnapshot removes a symlink inside the snapshot without " +
+    "following it: files outside the exchange dir survive") {
+    val exchange = Files.createTempDirectory("drop-exchange").toFile
+    val outside = Files.createTempDirectory("drop-outside").toFile
+    val kept = new java.io.File(outside, "keep.txt")
+    Files.write(kept.toPath, "keep".getBytes)
+    val snap = new java.io.File(exchange, "snap1")
+    snap.mkdirs()
+    Files.write(new java.io.File(snap, "data.txt").toPath, "x".getBytes)
+    Files.createSymbolicLink(new java.io.File(snap, "link").toPath,
+      outside.toPath)
+    val engine = new LynxEngine(SparkFixture.spark,
+      Files.createTempDirectory("drop-wal").toFile, 1024 * 1024)
+    val server = new LynxServer(engine, "127.0.0.1", 0,
+      exchangeDir = Some(exchange))
+    server.start()
+    try {
+      val r = post(server.boundPort, "/api/v1/admin/dropsnapshot",
+        """{"snapshot":"snap1"}""")
+      assert(r.statusCode() == 200 && r.body() == """{"dropped":true}""",
+        s"${r.statusCode()} ${r.body()}")
+      assert(!snap.exists(), "the snapshot directory must be gone")
+      assert(kept.isFile, "the link's target must be left alone")
+    } finally server.stop()
+    // a link given as the root itself is removed, not descended
+    val rootLink = new java.io.File(exchange, "rootlink").toPath
+    Files.createSymbolicLink(rootLink, outside.toPath)
+    graft.tier.ParquetTier.deleteTree(rootLink.toFile)
+    assert(!Files.exists(rootLink, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+    assert(kept.isFile)
   }
 
   test("ANN endpoint serves IVF top-k matching q_ann_ivf on the same " +

@@ -191,6 +191,28 @@ class ShardRouterSpec extends AnyFunSuite {
     }
   }
 
+  test("ann relays by index name: a malformed body is a 422 naming " +
+    "the reason, an unreachable owner a 502 naming the shard") {
+    withCluster(2) { (router, backends) =>
+      val rp = router.boundPort
+      for (bad <- Seq("not json", """{"vector":[1.0]}""")) {
+        val r = post(rp, "/api/v1/ann", bad)
+        assert(r.statusCode() == 422 && r.body().contains("\"error\""),
+          s"$bad: ${r.statusCode()} ${r.body()}")
+      }
+      val name = (0 until 50).map(i => s"idx$i")
+        .find(n => router.owner("ann:" + n)._1 == "s1").get
+      // the live owner answers for itself (no tier there: 404)
+      assert(post(rp, "/api/v1/ann",
+        s"""{"index":"$name","vector":[1.0]}""").statusCode() == 404)
+      backends.find(_._1 == "s1").get._2.stop()
+      val dead = post(rp, "/api/v1/ann",
+        s"""{"index":"$name","vector":[1.0]}""")
+      assert(dead.statusCode() == 502 && dead.body().contains("s1"),
+        s"${dead.statusCode()} ${dead.body()}")
+    }
+  }
+
   /** Tiered backends sharing one exchange dir — the migration
     * harness: snapshots hand off through shared storage exactly as
     * the deployment docs describe.
